@@ -44,24 +44,36 @@ object Bench {
       catch { case _: Throwable => () }
     }
     val names = SparkEntry.queries.keys.toSeq.sorted
-    def timeOne(name: String): Double = {
+    /** Wall seconds of one run, or None when the query throws: a
+      * broken query is an error, never a fast timing.
+      */
+    def timeOne(name: String): Option[Double] = {
       val fn = SparkEntry.queries(name)
       val t0 = System.nanoTime()
       // noop sink materializes every row (projections, sorts, round/md5
       // in the select list) — .count() would let Catalyst prune them
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
+      val ok =
+        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
+        catch {
+          case scala.util.control.NonFatal(e) =>
+            System.err.println(s"bench: $name failed: $e")
+            false
+        }
       val dt = (System.nanoTime() - t0) / 1e9
       // drain GC-triggered shuffle/broadcast cleanup between queries so
       // one query's garbage is not billed to the next one's timing
       spark.sqlContext.clearCache()
       System.gc()
-      dt
+      if (ok) Some(dt) else None
     }
-    val runs: Seq[Seq[(String, Double)]] =
+    val runs: Seq[Seq[(String, Option[Double])]] =
       (1 to reps).map(_ => names.map(n => n -> timeOne(n)))
-    val best: Seq[(String, Double)] =
-      names.map(n => n -> runs.map(_.toMap.apply(n)).min)
+    // a query that threw in any rep is an error: reported as such and
+    // left out of every total
+    val errored: Set[String] =
+      names.filter(n => runs.exists(_.toMap.apply(n).isEmpty)).toSet
+    val best: Seq[(String, Double)] = names.filterNot(errored)
+      .map(n => n -> runs.map(_.toMap.apply(n).get).min)
     def r4(v: Double): Double = math.rint(v * 1e4) / 1e4
     def r3(v: Double): Double = math.rint(v * 1e3) / 1e3
     // The driver snapshots only the LAST 2000 chars of stdout and
@@ -75,17 +87,21 @@ object Bench {
     // (full names, 4dp, per-rep detail) lives in the file artifact.
     // Measurement methodology is untouched — only the report shape.
     def shortId(name: String): String = name.takeWhile(_ != '_')
-    val qs = best.map { case (k, v) => s"\"" + shortId(k) + "\":" + r3(v) }
-      .mkString("{", ",", "}")
-    val qsFull = best.map { case (k, v) => s"\"" + k + "\":" + r4(v) }
-      .mkString("{", ",", "}")
+    val bestMap = best.toMap
+    def cell(v: Option[Double], fmt: Double => Double): String =
+      v.fold("\"error\"")(x => fmt(x).toString)
+    def qMap(key: String => String, fmt: Double => Double): String =
+      names.map(n => s"\"" + key(n) + "\":" + cell(bestMap.get(n), fmt))
+        .mkString("{", ",", "}")
+    val qs = qMap(shortId, r3)
+    val qsFull = qMap(identity, r4)
     val total = r4(best.map(_._2).sum)
-    val repTotals = runs.map(r => r4(r.map(_._2).sum))
-      .mkString("[", ",", "]")
+    val repTotals = runs.map(r => r4(r.filterNot(q => errored(q._1))
+      .map(_._2.get).sum)).mkString("[", ",", "]")
     def mkLine(queriesField: String): String =
       s"""{"metric":"total","value":$total,"unit":"sec"""" +
         s""","reps":$reps,"rep_totals":$repTotals,$queriesField""" +
-        s""","sf":"$sfDir"}"""
+        s""","sf":"$sfDir","errors":${errored.size}}"""
     val fullLine = mkLine(s""""queries":$qs""")
     val line =
       if (fullLine.length <= 1850) fullLine
@@ -96,7 +112,7 @@ object Bench {
     try {
       val perRep = runs.zipWithIndex.map { case (r, i) =>
         s""""run${i + 1}":""" + r.map { case (k, v) =>
-          s"\"" + k + "\":" + r4(v)
+          s"\"" + k + "\":" + cell(v, r4)
         }.mkString("{", ",", "}")
       }.mkString(",")
       val full = fileLine.dropRight(1) + s""","per_rep":{$perRep}}""" + "\n"
@@ -135,6 +151,7 @@ object Bench {
            |- sf dir: `$sfDir`, local[$cpus%s], best-of-$reps%d per query
            |- **${best.size}%d queries, total ${total}%.1f s** (sum of
            |  per-query minima); rep totals: $repTotals%s
+           |- errors (excluded from the totals): ${errored.size}%d
            |- slowest 10: $slowest%s
            |
            |Numbers above are emitted from the same measurement that

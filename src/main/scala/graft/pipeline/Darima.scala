@@ -546,20 +546,6 @@ object Darima {
     if (r.isNullAt(0)) Double.NaN else r.getDouble(0)
   }
 
-  /** Distributed full-series fitted values and residuals from the
-    * combined model — the reference carries these over the whole
-    * train series in forecast.json (darima.py:322-327, 400-408), but
-    * computes them driver-side from a dense n×p lag matrix; here the
-    * lag windows come from one range-bucketed array-window pass
-    * (OrderedLag.withLagArray) and the model rides along as column
-    * literals, so the series never reaches the driver.
-    *
-    * Returns (t, v, fitted, residual) rows; fitted/residual are null
-    * for the first p_eff rows (p_eff = the AR order with trailing
-    * zero coefficients trimmed — the honest lag requirement, not the
-    * reference's tol-padded NaN head, SURVEY.md §1.4.8). Float-op
-    * order matches Forecast.forecast's in-sample loop term for term.
-    */
   /** Σ harmonics as a column expression over phase τ = t/dt — the
     * column twin of Seasonal.value (same fold order).
     */
@@ -605,6 +591,22 @@ object Darima {
     if (r.isNullAt(0)) 0.0 else r.getDouble(0)
   }
 
+  /** Distributed full-series fitted values and residuals from the
+    * combined model — the reference carries these over the whole
+    * train series in forecast.json (darima.py:322-327, 400-408), but
+    * computes them driver-side from a dense n×p lag matrix; here the
+    * deseasonalized series z = v − s runs through [[ArKernel]], a
+    * per-range-bucket primitive AR loop seeded with each bucket's
+    * p-row halo, so the series never reaches the driver.
+    *
+    * Returns (t, v, fitted, residual) rows; fitted/residual are null
+    * for the first p_eff rows (p_eff = the AR order with trailing
+    * zero coefficients trimmed — the honest lag requirement, not the
+    * reference's tol-padded NaN head, SURVEY.md §1.4.8) and for rows
+    * whose p_eff-row lag window holds a null value; a null value's
+    * own residual is null. Float-op order matches Forecast.forecast's
+    * in-sample loop term for term.
+    */
   def fittedResidualsDF(series: DataFrame, model: ArLinearModel): DataFrame = {
     val named = series.select(col("time").cast("double").as("t"),
       col("value").cast("double").as("v"))
@@ -628,27 +630,7 @@ object Darima {
       return based.select(col("t"), col("v"), f.as("fitted"),
         (col("v") - f).as("residual"))
     }
-    // carry = keys + lag input only: the boundary patch relations
-    // don't need v/__s (the output path keeps them on the main rows)
-    val lagged = graft.ts.OrderedLag.withLagArray(
-      based, col("t"), col("t"), "__z", pEff, carry = Seq("t", "__z"))
-    // ascending-lag dot product: reverse the window (y_{t−1} first)
-    // and fold acc + π_i·z_{t−1−i} from acc = β0 — the same
-    // left-associated sequence as the driver recursion. β1 is folded
-    // in only when nonzero (needs the global row number).
-    val withTrend =
-      if (model.beta1 == 0.0) lagged.withColumn("__zero", lit(model.beta0))
-      else graft.ts.OrderedRank.withRowNumber(lagged, col("t"), col("t"), "__rn")
-        .withColumn("__zero", lit(model.beta0) + lit(model.beta1) * col("__rn"))
-        .drop("__rn")
-    val f = when(size(col("__z_lags")) < pEff, lit(null).cast("double"))
-      .otherwise(aggregate(
-        zip_with(reverse(col("__z_lags")), typedLit(piEff), (a, b) => a * b),
-        col("__zero"), (acc, x) => acc + x) + col("__s"))
-    withTrend
-      .withColumn("fitted", f)
-      .withColumn("residual", col("v") - col("fitted"))
-      .select(col("t"), col("v"), col("fitted"), col("residual"))
+    ArKernel.fittedResiduals(based, piEff, model.beta0, model.beta1)
   }
 
   /** Regime-aware seasonal weighting: score every chunk's harmonic
@@ -1602,11 +1584,16 @@ object Darima {
       frDf: DataFrame, n: Long, outDir: String,
       inlineMax: Long): Boolean = {
     if (n <= inlineMax) {
-      val fr = frDf.orderBy(col("t"))
-        .select(col("fitted"), col("residual")).collect()
+      // the rows come back to the driver anyway: sort them here by t
+      // (nulls first, as orderBy would) instead of a distributed sort
+      val fr = frDf.select(col("t"), col("fitted"), col("residual")).collect()
+      java.util.Arrays.sort(fr, (a: Row, b: Row) =>
+        if (a.isNullAt(0) || b.isNullAt(0))
+          java.lang.Boolean.compare(!a.isNullAt(0), !b.isNullAt(0))
+        else java.lang.Double.compare(a.getDouble(0), b.getDouble(0)))
       def arrOf(i: Int) = fr.map(r =>
         if (r.isNullAt(i)) Double.NaN else r.getDouble(i))
-      writeForecastJson(fc.copy(fitted = arrOf(0), residuals = arrOf(1)),
+      writeForecastJson(fc.copy(fitted = arrOf(1), residuals = arrOf(2)),
         s"$outDir/forecast.json")
       true
     } else {

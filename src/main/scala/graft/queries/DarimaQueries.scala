@@ -204,7 +204,7 @@ object DarimaQueries {
   }
 
   /** FC1/FC2 distributed: full-series fitted values + residuals from
-    * the combined model via the array-lag window
+    * the combined model via the partition-local AR kernel
     * (Darima.fittedResidualsDF) — the reference computes these
     * driver-side from a dense n×p lag matrix (darima.py:320-327).
     */

@@ -370,7 +370,6 @@ object PlanAudit {
       // OrderedLag's helper fan-out joins the per-bucket tails to the
       // ≤32-row broadcast target list on an inequality — bounded by
       // construction (buckets·maxLag rows)
-      "d07_fitted_residuals" -> Set("BNLJoin"),
       "x32_rolling_sum" -> Set("BNLJoin"),
       // k broadcast centroids (pmod-certified seed frame, cf. x36)
       "x57_semantic_dedup" -> Set("BNLJoin"),

@@ -43,20 +43,6 @@ object OrderedLag {
       },
       lags.map(k => s"${valueCol}_lag$k"), lags.max, buckets)
 
-  /** Add column `<valueCol>_lags` = the previous `p` values in time
-    * order (ascending, i.e. index 0 is y_{t−p} … last is y_{t−1});
-    * shorter at the start of the series. The sliding-array form an
-    * AR(p) fitted-value pass needs when p is too large for one
-    * column per lag (graft.pipeline.Darima.fittedResidualsDF).
-    */
-  def withLagArray(df: DataFrame, orderCol: Column, tieBreak: Column,
-      valueCol: String, p: Int, buckets: Int = 32,
-      carry: Seq[String] = null): DataFrame =
-    withLagColumns(df, orderCol, tieBreak,
-      (in, w) => in.withColumn(s"${valueCol}_lags",
-        collect_list(col(valueCol)).over(w.rowsBetween(-p, -1))),
-      Seq(s"${valueCol}_lags"), p, buckets, carry)
-
   /** Distributed rolling-window aggregate over the total order: the
     * generic entry for sliding-frame computations (moving sums/
     * averages/counts). `build` receives the bucketed window spec and
@@ -71,23 +57,58 @@ object OrderedLag {
     withLagColumns(df, orderCol, tieBreak, build, outCols,
       math.max(1, window - 1), buckets)
 
+  /** The range-bucket rule shared by the lag machinery and the
+    * fitted/residual AR kernel (graft.pipeline.ArKernel): ONE pass
+    * computes the row count and percentile bounds on the order key;
+    * the bucket count is clamped so the expected bucket holds at
+    * least 4·maxLag rows, and the bounds are deduplicated (heavy ties
+    * produce repeated quantiles, which would otherwise manufacture
+    * empty bucket ids). No bounds means one bucket.
+    */
+  private[graft] def bucketBounds(df: DataFrame, orderCol: Column,
+      maxLag: Int, buckets: Int = 32): Seq[Double] = {
+    val qs = (1 until math.max(buckets, 2)).map(i => i.toDouble / buckets)
+    val stats = df.select(
+      count(lit(1)).as("n"),
+      percentile_approx(orderCol.cast("double"),
+        array(qs.map(lit): _*), lit(10000)).as("b"))
+      .head()
+    val n = stats.getLong(0)
+    val rawBounds: Seq[Double] =
+      if (stats.isNullAt(1)) Seq.empty else stats.getSeq[Double](1)
+    val eff = math.max(1L, math.min(buckets.toLong,
+      n / (4L * maxLag))).toInt
+    // subsample the computed bounds to the effective bucket count
+    (1 until eff).map(i => rawBounds((i * buckets / eff) - 1))
+      .distinct.sorted
+  }
+
+  /** Bucket id in [0, bounds.size] for sorted `bounds`: the number of
+    * bounds strictly below the order key, so rows equal on the key
+    * share a bucket and ids ascend with the key (a null key lands in
+    * bucket 0).
+    */
+  private[graft] def bucketOf(orderCol: Column, bounds: Seq[Double]): Column =
+    bounds.foldLeft(lit(0)) { (acc, b) =>
+      acc + when(orderCol.cast("double") > lit(b), 1).otherwise(0)
+    }
+
+  /** [[bucketOf]] for one key value, by binary search over the sorted,
+    * distinct `bounds` (pass −∞ for a null key).
+    */
+  private[graft] def bucketIndex(bounds: Array[Double], key: Double): Int = {
+    val i = java.util.Arrays.binarySearch(bounds, key)
+    if (i >= 0) i else -i - 1
+  }
+
   /** Shared skeleton: range-bucketed windows + boundary head patch,
     * generic in the window-derived columns (`build` must add exactly
     * `outCols` using the given window spec).
-    *
-    * `carry` (optional) prunes the boundary side relations: heads/
-    * tails/helpers keep only these data columns instead of the full
-    * row. It must cover every column referenced by `orderCol`,
-    * `tieBreak`, and `build` — with a wide payload (e.g. the model
-    * columns riding along in the fitted/residual pass) the patch
-    * machinery then moves lag inputs + keys only. The main output
-    * path always keeps every column.
     */
   private def withLagColumns(df: DataFrame, orderCol: Column,
       tieBreak: Column,
       build: (DataFrame, org.apache.spark.sql.expressions.WindowSpec) => DataFrame,
-      outCols: Seq[String], maxLag: Int, buckets: Int,
-      carry: Seq[String] = null): DataFrame = {
+      outCols: Seq[String], maxLag: Int, buckets: Int): DataFrame = {
     require(outCols.nonEmpty && maxLag >= 1)
 
     // Broadcast-tier fast path (graft.tools.LocalTier): below the
@@ -101,27 +122,7 @@ object OrderedLag {
         .drop("__bucket")
     }
 
-    // One pass computes the row count (for the bucket-size clamp) and
-    // the candidate quantile bounds.
-    val qs = (1 until math.max(buckets, 2)).map(i => i.toDouble / buckets)
-    val stats = df.select(
-      count(lit(1)).as("n"),
-      percentile_approx(orderCol.cast("double"),
-        array(qs.map(lit): _*), lit(10000)).as("b"))
-      .head()
-    val n = stats.getLong(0)
-    val rawBounds: Seq[Double] =
-      if (stats.isNullAt(1)) Seq.empty else stats.getSeq[Double](1)
-
-    // Clamp: expected bucket size must comfortably exceed maxLag.
-    val eff = math.max(1L, math.min(buckets.toLong,
-      n / (4L * maxLag))).toInt
-    // Subsample the computed bounds to the effective bucket count,
-    // then deduplicate (heavy ties produce repeated quantiles, which
-    // would otherwise manufacture empty bucket ids).
-    val bounds = (1 until eff)
-      .map(i => rawBounds((i * buckets / eff) - 1))
-      .distinct.sorted
+    val bounds = bucketBounds(df, orderCol, maxLag, buckets)
 
     if (bounds.isEmpty) {
       // Degenerate input (under 4·maxLag rows, or a constant order
@@ -132,10 +133,7 @@ object OrderedLag {
         .drop("__bucket")
     }
 
-    val bucket = bounds.foldLeft(lit(0)) { (acc, b) =>
-      acc + when(orderCol.cast("double") > lit(b), 1).otherwise(0)
-    }
-    val based = df.withColumn("__bucket", bucket)
+    val based = df.withColumn("__bucket", bucketOf(orderCol, bounds))
 
     // THE full-data pass: per-bucket sort computes every lag column.
     // Row numbers / bucket sizes live only in the narrow aux pass
@@ -148,14 +146,12 @@ object OrderedLag {
     // each bucket's last maxLag rows — the helper pool (the globally
     // last maxLag rows before any boundary are a subset of the union
     // of earlier tails). Both are at most buckets·maxLag rows, found
-    // by ONE narrow pass (keys + carry only, no lag building) and
+    // by ONE narrow pass (no lag building) and
     // materialized once (graft.tools.Materialize): deriving them from `local`
     // instead re-ran the full build-and-sort once per boundary
     // relation — 3 full-data window passes where 2 suffice.
-    val dataCols =
-      if (carry == null) based.columns
-      else (carry :+ "__bucket").distinct.toArray
-    val boundary = based.select(dataCols.map(col): _*)
+    val dataCols = based.columns
+    val boundary = based
       .withColumn("__rn", row_number().over(w))
       .withColumn("__cnt", count(lit(1)).over(wAll))
       .filter(col("__rn") <= maxLag ||

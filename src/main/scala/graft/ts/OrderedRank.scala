@@ -77,10 +77,8 @@ object OrderedRank {
         .drop("__bucket")
     }
 
-    val bucket = bounds.foldLeft(lit(0)) { (acc, b) =>
-      acc + when(orderCol.cast("double") > lit(b), 1).otherwise(0)
-    }
-    val based = pinned.withColumn("__bucket", bucket)
+    val based = pinned.withColumn("__bucket",
+      OrderedLag.bucketOf(orderCol, bounds))
 
     // THE full-data pass: per-bucket sort computes the local row
     // number — the only wide shuffle and sort in the plan.
@@ -157,10 +155,8 @@ object OrderedRank {
         .drop("__bucket")
     }
 
-    val bucket = bounds.foldLeft(lit(0)) { (acc, b) =>
-      acc + when(orderCol.cast("double") > lit(b), 1).otherwise(0)
-    }
-    val based = pinned.withColumn("__bucket", bucket)
+    val based = pinned.withColumn("__bucket",
+      OrderedLag.bucketOf(orderCol, bounds))
 
     // THE full-data pass: within-bucket exclusive running sum.
     val w = Window.partitionBy(col("__bucket")).orderBy(orderCol, tieBreak)

@@ -14,6 +14,16 @@ import graft.queries.DarimaQueries
 class DarimaPipelineSpec extends AnyFunSuite {
   import SparkTestSession._
 
+  /** The reference's electricity CSV at `path`; the test is canceled,
+    * not failed, where that corpus is not installed — the synthetic
+    * twins below make the same assertions on a generated series.
+    */
+  private def referenceCsv(path: String) = {
+    assume(new java.io.File(path).isFile,
+      s"reference corpus file $path is not installed")
+    Darima.loadSeriesCsv(spark, path)
+  }
+
   test("chunk fit emits a full coefficient table per chunk") {
     val cfg = DarimaConfig(numChunks = 4, freq = 24, tol = 24,
       maxP = 3, maxQ = 2)
@@ -46,9 +56,9 @@ class DarimaPipelineSpec extends AnyFunSuite {
   }
 
   test("electricity e2e: reference fixture, K=4, forecast h=2879") {
-    val train = Darima.loadSeriesCsv(spark,
+    val train = referenceCsv(
       "/root/reference/data/NEMASSBOST_train.csv")
-    val test0 = Darima.loadSeriesCsv(spark,
+    val test0 = referenceCsv(
       "/root/reference/data/NEMASSBOST_test.csv")
     val testVals = test0.orderBy("time").select("value").collect()
       .map(_.getDouble(0))
@@ -128,9 +138,9 @@ class DarimaPipelineSpec extends AnyFunSuite {
     // calibration (stationary cap + Fourier harmonics + last-year
     // level anchor, Darima.run) must bring intervals within 2× of the
     // shipped harmonic default while keeping points usable.
-    val train = Darima.loadSeriesCsv(spark,
+    val train = referenceCsv(
       "/root/reference/data/NEMASSBOST_train.csv")
-    val test0 = Darima.loadSeriesCsv(spark,
+    val test0 = referenceCsv(
       "/root/reference/data/NEMASSBOST_test.csv")
     val testVals = test0.orderBy("time").select("value").collect()
       .map(_.getDouble(0))
@@ -148,6 +158,87 @@ class DarimaPipelineSpec extends AnyFunSuite {
     // level with the shipped harmonic default — pin it there
     assert(mase < 1.05, s"MASE=$mase")
     assert(msis95 > 0 && msis95 < 12, s"MSIS95=$msis95")
+  }
+
+  test("synthetic e2e: paper-shape series, K=4, forecast h=2879") {
+    // twin of the reference-fixture test on PaperShapeSeries, plus the
+    // output layer at paper scale: fitted/residuals at p = 2000 and
+    // the inline forecast.json sink
+    val (train, trainVals, testVals) = PaperShapeSeries.split(spark)
+    val h = testVals.length
+    assert(h == 2879)
+    val cfg = DarimaConfig(numChunks = 4, freq = 24, method = "dlsa",
+      tol = 2000, maxP = 5, maxQ = 5)
+    val (model, fc) = Darima.run(spark, train, h, cfg)
+    assert(model.p == 2000)
+    assert(model.sigma2 > 0)
+    assert(fc.mean.forall(v => !v.isNaN && math.abs(v) < 1e5))
+    val mase = Metrics.mean(Metrics.mase(trainVals, testVals, fc.mean, 24))
+    val smape = Metrics.mean(Metrics.smape(testVals, fc.mean))
+    val msis95 = Metrics.mean(Metrics.msis(trainVals, testVals,
+      fc.lower(1), fc.upper(1), 95, 24))
+    info(s"paper-shape: MASE=$mase sMAPE=$smape MSIS95=$msis95 " +
+      s"sigma2=${model.sigma2}")
+    // bounds re-derived for this series, about 20% above what the
+    // engine reaches on it (MASE 2.71, sMAPE 0.098, MSIS95 15.5), the
+    // margin the reference test keeps. MASE sits far above the
+    // fixture's 1.10 by construction: the denominator is the lag-24
+    // in-sample difference, dominated by the AR(2) noise (sd ≈ 70, no
+    // weather swings), while longar's AR(2000) spans 83 days and
+    // cannot carry the ±330 yearly cycle across a 120-day horizon
+    assert(mase < 3.25, s"MASE=$mase")
+    assert(smape < 0.12, s"sMAPE=$smape")
+    assert(msis95 > 0 && msis95 < 19, s"MSIS=$msis95")
+    // fitted/residuals row for row against Forecast.forecast's
+    // in-sample recursion (hourly grid: phase τ = t/3600)
+    val frDf = Darima.fittedResidualsDF(train, model)
+    val got = frDf.orderBy("t").collect()
+    val drv = graft.forecast.Forecast.forecast(model, trainVals, h = 1,
+      levels = Array(80), startIndex = 0L,
+      tauStart = got(0).getDouble(0) / 3600.0)
+    assert(got.length == trainVals.length)
+    val pEff = model.pi.lastIndexWhere(_ != 0.0) + 1
+    def close(a: Double, b: Double) =
+      if (model.harmonics.isEmpty) a == b
+      else math.abs(a - b) <= 1e-9 * math.max(1.0, math.abs(b))
+    got.indices.foreach { i =>
+      if (i < pEff) assert(got(i).isNullAt(2) && got(i).isNullAt(3), s"row $i")
+      else if (i >= model.p) {
+        assert(close(got(i).getDouble(2), drv.fitted(i)),
+          s"row $i: ${got(i).getDouble(2)} vs ${drv.fitted(i)}")
+        assert(close(got(i).getDouble(3), drv.residuals(i)), s"row $i")
+      }
+    }
+    // forecast.json sink, inline branch: the whole-train arrays in
+    // time order, value for value
+    val tmp = java.nio.file.Files.createTempDirectory("fc").toString
+    assert(Darima.writeForecastOutputs(fc, frDf, model.n, tmp,
+      inlineMax = model.n))
+    val json = java.nio.file.Files.readString(
+      java.nio.file.Paths.get(s"$tmp/forecast.json"))
+    val inlined = json.split("\"fitted\":\\[")(1).split("]")(0).split(",")
+    assert(inlined.length == got.length)
+    got.indices.foreach { i =>
+      val want = if (got(i).isNullAt(2)) "null" else got(i).getDouble(2).toString
+      assert(inlined(i) == want, s"fitted[$i]")
+    }
+  }
+
+  test("synthetic e2e: calibrated sarima fitter at long horizon") {
+    // twin of the reference sarima test on PaperShapeSeries
+    val (train, trainVals, testVals) = PaperShapeSeries.split(spark)
+    val cfg = DarimaConfig(fitter = "sarima")
+    val (_, fc) = Darima.run(spark, train, testVals.length, cfg)
+    val mase = Metrics.mean(Metrics.mase(trainVals, testVals, fc.mean, 24))
+    val msis95 = Metrics.mean(Metrics.msis(trainVals, testVals,
+      fc.lower(1), fc.upper(1), 95, 24))
+    info(s"paper-shape sarima: MASE=$mase MSIS95=$msis95")
+    // about 20% above what the engine reaches here (MASE 0.634,
+    // MSIS95 4.40), as for the reference test (0.87 → 1.05): the
+    // injected yearly pairs carry the cycle longar misses, so sarima
+    // must stay well below the longar twin
+    assert(mase < 0.76, s"MASE=$mase")
+    assert(msis95 > 0 && msis95 < 5.3, s"MSIS95=$msis95")
   }
 
   test("harmonic phase survives DST-style gaps (gap-robust dt)") {
@@ -185,11 +276,8 @@ class DarimaPipelineSpec extends AnyFunSuite {
     }
   }
 
-  test("distributed fitted/residuals match the driver recursion") {
-    import spark.implicits._
-    // deterministic AR(2)-ish series, long enough to span several
-    // OrderedLag buckets so the head-patch path is exercised
-    val n = 4000
+  /** Deterministic AR(2)-ish series of n points, indexed time 0…n−1. */
+  private def ar2Series(n: Int): Array[Double] = {
     var state = 9L
     def rnd(): Double = {
       state = state * 6364136223846793005L + 1442695040888963407L
@@ -203,24 +291,75 @@ class DarimaPipelineSpec extends AnyFunSuite {
         (if (t >= 2) 0.2 * xs(t - 2) else 0.0)
       t += 1
     }
+    xs
+  }
+
+  test("distributed fitted/residuals match the driver recursion") {
+    import spark.implicits._
+    // 4,000 rows split into 32 range buckets at p = 2 and 3 buckets at
+    // p = 300, so bucket halos (and, with β1 ≠ 0, global row offsets)
+    // carry the lag window across boundaries; without harmonics the
+    // fold is the driver's, bit for bit
+    val n = 4000
+    val xs = ar2Series(n)
     val ser = xs.zipWithIndex.map { case (v, i) => (i.toDouble, v) }
       .toSeq.toDF("time", "value")
-    val model = graft.arima.ArLinearModel(
-      beta0 = 1.5, beta1 = 0.0, pi = Array(0.5, 0.2), sigma2 = 1.0, n = n)
-    val got = Darima.fittedResidualsDF(ser, model)
-      .orderBy("t").collect()
+    val models = Seq(
+      graft.arima.ArLinearModel(beta0 = 1.5, beta1 = 0.0,
+        pi = Array(0.5, 0.2), sigma2 = 1.0, n = n),
+      graft.arima.ArLinearModel(beta0 = 1.5, beta1 = 1e-4,
+        pi = Array.tabulate(300)(j => 0.4 * math.pow(0.6, j) + 1e-5),
+        sigma2 = 1.0, n = n))
+    models.foreach { model =>
+      val p = model.pi.length
+      val frDf = Darima.fittedResidualsDF(ser, model)
+      assert(frDf.rdd.getNumPartitions > 1, s"p=$p ran as one bucket")
+      val got = frDf.orderBy("t").collect()
+      val fc = graft.forecast.Forecast.forecast(model, xs, h = 1,
+        levels = Array(80))
+      assert(got.length == n)
+      var i = 0
+      while (i < n) {
+        if (i < p) {
+          assert(got(i).isNullAt(2) && got(i).isNullAt(3),
+            s"p=$p row $i should be null")
+        } else {
+          assert(got(i).getDouble(2) == fc.fitted(i),
+            s"p=$p row $i: ${got(i).getDouble(2)} vs ${fc.fitted(i)}")
+          assert(got(i).getDouble(3) == fc.residuals(i), s"p=$p row $i")
+        }
+        i += 1
+      }
+    }
+  }
+
+  test("fitted/residuals: a null value nulls the rows whose lag window holds it") {
+    import spark.implicits._
+    // the lag window skips nothing: a null value makes the next p rows
+    // null (fitted and residual), its own residual null, and leaves
+    // every other row equal to the driver recursion
+    val n = 4000
+    val xs = ar2Series(n)
+    val nulls = Set(50, 2001)
+    val ser = xs.indices.map(i =>
+      (i.toDouble, if (nulls(i)) None else Some(xs(i))))
+      .toDF("time", "value")
+    val p = 3
+    val model = graft.arima.ArLinearModel(beta0 = 1.5, beta1 = 0.0,
+      pi = Array(0.5, 0.2, 0.1), sigma2 = 1.0, n = n)
+    val got = Darima.fittedResidualsDF(ser, model).orderBy("t").collect()
     val fc = graft.forecast.Forecast.forecast(model, xs, h = 1,
       levels = Array(80))
     assert(got.length == n)
-    var i = 0
-    while (i < n) {
-      if (i < 2) assert(got(i).isNullAt(2), s"row $i should be null")
+    got.indices.foreach { i =>
+      val inWindow = nulls.exists(j => i > j && i - j <= p)
+      if (i < p || inWindow)
+        assert(got(i).isNullAt(2) && got(i).isNullAt(3), s"row $i")
       else {
-        assert(math.abs(got(i).getDouble(2) - fc.fitted(i)) < 1e-12,
-          s"row $i: ${got(i).getDouble(2)} vs ${fc.fitted(i)}")
-        assert(math.abs(got(i).getDouble(3) - fc.residuals(i)) < 1e-12)
+        assert(got(i).getDouble(2) == fc.fitted(i), s"row $i")
+        if (nulls(i)) assert(got(i).isNullAt(1) && got(i).isNullAt(3), s"row $i")
+        else assert(got(i).getDouble(3) == fc.residuals(i), s"row $i")
       }
-      i += 1
     }
   }
 
