@@ -6,11 +6,11 @@ import org.apache.spark.sql.expressions.Aggregator
 /** The chunk fit as a typed `Aggregator` (SURVEY.md §4.2's optional
   * UDAF form): makes a DARIMA fit expressible inside `agg(...)` on a
   * KeyValueGroupedDataset, composable with other aggregates in one
-  * pass. Identical to the `flatMapGroups` path by construction — both
+  * pass. Identical to the chunk-partition map step by construction — both
   * call [[Darima.fitOneChunk]]; buffer collects (time, value) pairs,
   * finish sorts and fits.
   *
-  * The buffer is O(chunk) like the flatMapGroups path (a fit needs
+  * The buffer is O(chunk) like the chunk-partition map step (a fit needs
   * the whole series); Kryo-encoded so spill still works.
   */
 final case class CoefRow(coef: String, lag_idx: Int, value: Double,

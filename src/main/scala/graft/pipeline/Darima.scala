@@ -7,15 +7,15 @@ import graft.forecast.{Forecast, ForecastResult}
 import graft.ts.Chunker
 
 /** End-to-end DARIMA on Spark — one Catalyst plan from scan to the
-  * combined coefficient table, pure-JVM model math inside
-  * `flatMapGroups` (the reference crosses Python driver → JVM →
+  * combined coefficient table, pure-JVM model math inside the
+  * per-chunk fit tasks (the reference crosses Python driver → JVM →
   * Python worker → embedded R per task, SURVEY.md §3.1; this engine
   * is JVM-only).
   *
   * Pipeline (reference trace at SURVEY.md §3.2):
   *   series(time,value)
   *     → contiguous chunk ids               [P1, fixed per §1.4.2]
-  *     → groupByKey(chunk).flatMapGroups(sort ∘ fit ∘ linearize)
+  *     → repartitionById(K, chunk).mapPartitions(sort ∘ fit ∘ linearize)
   *                                          [M1-M7, auto_arima.R:7-93]
   *     → groupBy(coef) DLSA / mean combine  [A1-A4, paper-correct §1.4.6]
   *     → driver forecast + intervals        [FC1-FC8, darima.py:292-414]
@@ -164,19 +164,6 @@ final case class DarimaConfig(
 
 object Darima {
 
-  /** Map step: fit one SARIMA per contiguous chunk, linearize to
-    * AR(tol), emit (chunk_id, coef, lag_idx, value, weight, n) rows.
-    * `weight` is the DLSA precision n_k/σ²_k (reference:
-    * auto_arima.R:103-110); `lag_idx` keeps AR coefficients
-    * integer-ordered so no zero-pad/rename dance is needed
-    * (SURVEY.md F2).
-    */
-  /** One chunk's fit: harmonic stage, AR/ARMA fit, linearization,
-    * coefficient rows. Shared verbatim by the `flatMapGroups` path
-    * below and the typed-Aggregator form ([[ArimaFitAggregator]]), so
-    * the two API surfaces cannot drift (d01 ≡ d06 by construction).
-    * `buf` must be time-sorted (time, value) pairs.
-    */
   /** Robust sample interval: the MEDIAN of successive time diffs.
     * The naive (last − first)/(n − 1) average is poisoned by gaps —
     * 28 DST spring-forward holes in a 121k-hour electricity series
@@ -228,7 +215,14 @@ object Darima {
     else seas
   }
 
-  private[pipeline] def fitOneChunk(buf: Array[(Double, Double)],
+  /** One chunk's fit: harmonic stage, AR/ARMA fit, linearization,
+    * coefficient rows. Shared verbatim by the chunk-partition map step
+    * ([[fitChunkCoefs]]), the fleet fits and the typed-Aggregator form
+    * ([[ArimaFitAggregator]]), so the API surfaces cannot drift
+    * (d01 ≡ d06 by construction). `buf` must be time-sorted
+    * (time, value) pairs.
+    */
+  private[graft] def fitOneChunk(buf: Array[(Double, Double)],
       cfg: DarimaConfig): Array[CoefRow] = {
     val raw = buf.map(_._2)
     // Fourier stage: fit + subtract the periodic signal so the AR
@@ -366,6 +360,31 @@ object Darima {
     }
   }
 
+  /** Map step: fit one model per contiguous chunk, linearize to
+    * AR(tol), emit (chunk_id, coef, lag_idx, value, weight, n) rows.
+    * `weight` is the DLSA precision n_k/σ²_k (reference:
+    * auto_arima.R:103-110); `lag_idx` keeps AR coefficients
+    * integer-ordered so no zero-pad/rename dance is needed
+    * (SURVEY.md F2).
+    *
+    * Chunk k crosses a `repartitionById` exchange to partition k, so
+    * the K fits run in K tasks. Every chunker emits ids in [0, K). A
+    * hash exchange (`groupByKey`) is no substitute: its shuffle is
+    * small (about 2 MB for a 121k-row series), and adaptive execution
+    * coalesces it into one partition, where a single task fits every
+    * chunk in turn; a partition-id exchange is never coalesced.
+    *
+    * The frame ends with a hash exchange on the combine's keys
+    * (coef, lag_idx), so the DLSA/mean aggregate runs in its own
+    * stage. Without it the partial aggregate is fused into the fit
+    * stage, and each fit task allocates the aggregate's hash-map page
+    * (32 MB in a 4 GB local[4] JVM) before its first row and holds it
+    * for the whole fit: on the 121k-row paper-shape series at K = 4
+    * the peak post-GC heap was ~237 MB without the exchange and
+    * ~131 MB with it. In local mode the reduce side reads map outputs
+    * in map-task order, and map task k holds chunk k, so the DLSA sums
+    * run in chunk order.
+    */
   def fitChunkCoefs(spark: SparkSession, series: DataFrame,
       cfg: DarimaConfig): DataFrame =
     fitChunkCoefsBounded(spark, series, cfg, None)
@@ -383,14 +402,18 @@ object Darima {
     val chunked = chunkSeries(series, cfg, timeBounds)
     val fitted: Dataset[(Int, String, Int, Double, Double, Long)] = chunked
       .select(col("chunk_id"), col("t"), col("v"))
+      .repartitionById(cfg.numChunks, col("chunk_id"))
       .as[(Int, Double, Double)]
-      .groupByKey(_._1)
-      .flatMapGroups { (chunkId, it) =>
-        val buf = it.map(r => (r._2, r._3)).toArray.sortBy(_._1)
-        fitOneChunk(buf, cfg).iterator.map(c =>
-          (chunkId, c.coef, c.lag_idx, c.value, c.weight, c.n))
+      .mapPartitions { rows =>
+        rows.toArray.groupBy(_._1).toArray.sortBy(_._1).iterator.flatMap {
+          case (chunkId, rs) =>
+            val buf = rs.map(r => (r._2, r._3)).sortBy(_._1)
+            fitOneChunk(buf, cfg).iterator.map(c =>
+              (chunkId, c.coef, c.lag_idx, c.value, c.weight, c.n))
+        }
       }
     fitted.toDF("chunk_id", "coef", "lag_idx", "value", "weight", "n")
+      .repartition(col("coef"), col("lag_idx"))
   }
 
   /** Reduce step: one Catalyst hash aggregate (partial + final — the

@@ -12,7 +12,7 @@ import graft.eval.Metrics
   *
   * Every query here is oracle-checked end to end. The technique
   * (proved by d05 in round 1): run the REAL distributed pipeline —
-  * exact ntile chunking, groupByKey fit, DLSA combine, the driver
+  * exact ntile chunking, chunk-partition fit, DLSA combine, the driver
   * forecast recursion, the metric stack — but pin the inner fit to
   * the closed-form `olsar` fitter (OLS AR(p) by streaming normal
   * equations, ArFit.olsAr), which a DuckDB oracle can reproduce:
@@ -60,7 +60,7 @@ object DarimaQueries {
       .otherwise(round(col("value"), 6)).as("value")
 
   /** M1-M8: per-chunk fit + coefficient un-nest, on the REAL
-    * flatMapGroups path (Darima.fitChunkCoefs) with the closed-form
+    * chunk-partition map step (Darima.fitChunkCoefs) with the closed-form
     * AR(2) fitter — oracle solves the same normal equations by
     * Cramer's rule per ntile chunk.
     */

@@ -7,7 +7,7 @@ import graft.pipeline.{ArimaFitAggregator, Darima, DarimaConfig}
 class AggregatorSpec extends AnyFunSuite {
   import SparkTestSession._
 
-  test("Aggregator fit path matches flatMapGroups fit path") {
+  test("Aggregator fit path matches the chunk-partition fit path") {
     import spark.implicits._
     val cfg = DarimaConfig(numChunks = 4, freq = 24, tol = 24,
       maxP = 3, maxQ = 2)
@@ -27,7 +27,7 @@ class AggregatorSpec extends AnyFunSuite {
         rows.map(r => (chunkId, r.coef, r.value))
       }
       .collect().map(t => (t._1, t._2) -> t._3).toMap
-    // flatMapGroups path
+    // chunk-partition map step (Darima.fitChunkCoefs)
     val viaGroups = Darima.fitChunkCoefs(spark, series, cfg)
       .select("chunk_id", "coef", "value")
       .collect().map(r => (r.getInt(0), r.getString(1)) -> r.getDouble(2))

@@ -38,6 +38,95 @@ class DarimaPipelineSpec extends AnyFunSuite {
     assert(coefs.filter(col("weight") <= 0).count() == 0)
   }
 
+  /** An hourly AR(2)-plus-daily-cycle series at the given hour
+    * offsets, as (time, value).
+    */
+  private def hourly(hours: Seq[Int]): org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    val xs = ar2Series(hours.length)
+    hours.zip(xs).map { case (hr, x) =>
+      (1.6e9 + 3600.0 * hr, x + 3.0 * math.sin(2 * math.Pi * hr / 24.0))
+    }.toDF("time", "value")
+  }
+
+  test("chunk fit: each chunk's rows equal fitOneChunk on the driver") {
+    val cfg = DarimaConfig(numChunks = 4, freq = 24, tol = 24,
+      maxP = 3, maxQ = 2, fitter = "arma", harmDaily = 1)
+    // the third series has no rows in the second quarter of its time
+    // span, so the timerange chunker leaves chunk 1 empty
+    val dense = hourly(0 until 2000)
+    val gapped = hourly((0 until 500) ++ (1000 until 2000))
+    for ((chunker, ser, chunks) <- Seq(("range", dense, 0 to 3),
+        ("timerange", dense, 0 to 3), ("timerange", gapped, Seq(0, 2, 3)))) {
+      val c = cfg.copy(chunker = chunker)
+      val got = Darima.fitChunkCoefs(spark, ser, c).collect()
+        .map(r => (r.getInt(0), r.getString(1)) ->
+          (r.getDouble(3), r.getDouble(4), r.getLong(5))).toMap
+      val named = ser.select(col("time").as("t"), col("value").as("v"))
+      val assigned =
+        if (chunker == "range") graft.ts.Chunker.rangeChunks(named, col("t"), 4)
+        else graft.ts.Chunker.timeChunks(named, col("t"), 4)
+      val want = assigned.select("chunk_id", "t", "v").collect()
+        .groupBy(_.getInt(0)).toSeq.flatMap { case (k, rs) =>
+          val buf = rs.map(r => (r.getDouble(1), r.getDouble(2))).sortBy(_._1)
+          Darima.fitOneChunk(buf, c).map(r =>
+            (k, r.coef) -> (r.value, r.weight, r.n))
+        }.toMap
+      assert(got.keySet.map(_._1) == chunks.toSet, s"$chunker chunk ids")
+      assert(got == want, s"$chunker: distributed fit differs from the driver")
+    }
+  }
+
+  /** Per stage that ran a task inside `body`: (the number of its tasks
+    * that read shuffle records, the records they read in all).
+    */
+  private def shuffleReadsByStage(body: => Unit): Map[Int, (Int, Long)] = {
+    val reads = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long)]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(
+          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null)
+          reads.add((e.stageId, e.taskMetrics.shuffleReadMetrics.recordsRead))
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.ListenerDrain(sc)
+    } finally sc.removeSparkListener(listener)
+    reads.toArray(Array.empty[(Int, Long)]).groupBy(_._1).map {
+      case (stage, rs) => stage -> (rs.count(_._2 > 0), rs.map(_._2).sum)
+    }
+  }
+
+  test("chunk fit: K chunks are fitted in K tasks, with or without AQE") {
+    val n = 4000
+    val ser = hourly(0 until n)
+    val cfg = DarimaConfig(numChunks = 4, freq = 24, fitter = "olsar",
+      chunker = "timerange")
+    val aqe = "spark.sql.adaptive.enabled"
+    val saved = spark.conf.getOption(aqe)
+    try {
+      for (enabled <- Seq("true", "false")) {
+        spark.conf.set(aqe, enabled)
+        val stages = shuffleReadsByStage {
+          Darima.fitChunkCoefs(spark, ser, cfg).collect()
+        }
+        // the chunk exchange is the only one that carries every row
+        val readers = stages.values.collect {
+          case (tasks, records) if records == n => tasks
+        }
+        assert(readers.toSeq == Seq(cfg.numChunks),
+          s"AQE $enabled: tasks reading the chunk exchange, per stage: " +
+            s"$stages")
+      }
+    } finally saved match {
+      case Some(v) => spark.conf.set(aqe, v)
+      case None => spark.conf.unset(aqe)
+    }
+  }
+
   test("combine: dlsa equals mean when all chunk weights are equal") {
     import spark.implicits._
     val coefs = Seq(
