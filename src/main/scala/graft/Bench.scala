@@ -1,10 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // best-of-N protocol: per-query wall time is the MIN across reps
     // (one-off GC/compilation/page-cache noise only ever adds time),
     // with every rep's total recorded so run-to-run spread is visible
@@ -12,23 +10,8 @@ object Bench {
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       "/root/repo/BENCH_full.json")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // Always use the sort-based shuffle writer (engine config, not
-      // bench methodology). With R = cpus ≤ 200 the bypass-merge
-      // writer opens R files PER MAP TASK (cpus² tiny file creates +
-      // merges per shuffle) — measured 2× on every sub-second shuffle
-      // stage at local[32] (0.53 s → 0.27 s for a 116k-row groupBy).
-      // At production scale R > 200, so the bypass never fires and
-      // the sort writer IS the at-scale path; this pins the same
-      // writer locally instead of a small-R special case.
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_BYPASS", "1"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = GraftSession.envCpus
+    val spark = GraftSession(cpus)
     // ERROR, not WARN: the driver json-parses the LAST 2000 chars of
     // the run's output, and benign WARN spam (x45's dimension-window
     // WindowExec notes land on stderr) appended after the JSON line

@@ -16,11 +16,11 @@ object Tables {
     else spark.read.parquet(s"$sfDir/$name.parquet")
   // NOTE on scan parallelism: the harness files are single-row-group
   // parquet, so a scan plans ONE split. The scale-adaptive fix lives
-  // in graft.tools.Spread and is applied INSIDE the row-expanding
-  // operators (shingles, char grams, trigram LM, simhash, embedding
-  // micro-arrays) — a table-level spread here was measured to tax
-  // every light consumer +0.2-0.5 s per query while only the
-  // expansion passes repay the exchange.
+  // in graft.tools.ScaleTier.spread and is applied INSIDE the
+  // row-expanding operators (shingles, char grams, trigram LM,
+  // simhash, embedding micro-arrays) — a table-level spread here was
+  // measured to tax every light consumer +0.2-0.5 s per query while
+  // only the expansion passes repay the exchange.
 
   /** `events.ts` has shipped as both parquet TIMESTAMP(NANOS) (which
     * Spark's vectorized reader rejects — read as raw nanos via the

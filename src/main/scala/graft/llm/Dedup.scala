@@ -22,7 +22,7 @@ object Dedup {
     * deliberate, documented choice applied in both dialects.
     */
   def shingles(docs: DataFrame): DataFrame =
-    graft.tools.Spread(docs)
+    graft.tools.ScaleTier.spread(docs)
       .select(col("doc_id"), split(col("text"), " ").as("t"))
       .filter(size(col("t")) >= 3)
       .select(col("doc_id"), explode(array_distinct(expr(
@@ -41,7 +41,7 @@ object Dedup {
     * global distinct, which would shuffle every gram string.
     */
   def nGrams(docs: DataFrame, n: Int): DataFrame =
-    graft.tools.Spread(docs)
+    graft.tools.ScaleTier.spread(docs)
       .select(col("doc_id"), split(col("text"), " ").as("t"))
       .filter(size(col("t")) >= n)
       .select(col("doc_id"), explode(array_distinct(expr(
@@ -358,7 +358,7 @@ object Dedup {
     s"cast(conv(substr(md5($strCol), 1, 8), 16, 10) as bigint)"
 
   def simhash32Signatures(docs: DataFrame): DataFrame = {
-    val tok = graft.tools.Spread(docs)
+    val tok = graft.tools.ScaleTier.spread(docs)
       .select(col("doc_id"),
         explode(array_distinct(split(col("text"), " "))).as("w"))
       .withColumn("v", expr(hash32FastExpr("w")))
@@ -684,18 +684,6 @@ object Dedup {
     * Pair endpoints absent from `vertices` are discovered through the
     * edge join, labeled, and included in the output.
     */
-  /** Edge-count gate for the broadcast-scale fast path below: when
-    * the symmetrized near-dup edge list has at most this many rows,
-    * components are resolved in one bounded driver pass (union-find)
-    * instead of the iterative join loop — the SAME size-adaptive
-    * trade a broadcast hash join makes (collect the provably-small
-    * side, skip the shuffles). 1M edges ≈ 16 MB of (long, long) —
-    * broadcast-tier, and the default keeps the transfer under the
-    * usual 10 MB/row-count broadcast comfort zone with the loop as
-    * the general path for anything bigger.
-    */
-  val CcBroadcastMaxEdgesKey = "spark.graft.cc.broadcastMaxEdges"
-
   def connectedComponents(vertices: DataFrame, pairs: DataFrame,
       maxIter: Int = 25): DataFrame = {
     val bidir = pairs.select(col("d1").as("a"), col("d2").as("b"))
@@ -710,15 +698,12 @@ object Dedup {
     // ALREADY-materialized frame — one cheap job), resolve components
     // with union-find in a single bounded driver pass and hand the
     // ≤|endpoints|-row label table straight back to Catalyst. This is
-    // a BOUNDED transfer with a hard conf gate, not a driver loop
-    // over corpus data: above the gate (any 100 TB-scale graph) the
-    // distributed loop runs exactly as before. Labels are identical
-    // by construction — min node id per component in both paths.
-    val maxLocal = pairs.sparkSession.conf
-      .getOption(CcBroadcastMaxEdgesKey).map(_.toLong)
-      .getOrElse(1000000L)
-    val nEdges = bidir.count()
-    if (nEdges <= maxLocal) {
+    // a BOUNDED transfer behind a hard gate (ScaleTier.localEdges),
+    // not a driver loop over corpus data: above the gate (any 100 TB-
+    // scale graph) the distributed loop runs exactly as before.
+    // Labels are identical by construction — min node id per
+    // component in both paths.
+    if (graft.tools.ScaleTier.localEdges(pairs.sparkSession, bidir.count())) {
       val spark = pairs.sparkSession
       import spark.implicits._
       val parent = scala.collection.mutable.HashMap.empty[Long, Long]
@@ -1984,7 +1969,7 @@ object Dedup {
   }
 
   private[graft] def tokenArrays(docs: DataFrame): DataFrame =
-    graft.tools.Spread(docs)
+    graft.tools.ScaleTier.spread(docs)
       .select(col("doc_id"), split(col("text"), " ").as("t"))
 
   /** (doc_id, pos, h = md5 of the k-gram starting at pos) for every

@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.tools.ScaleTier
 
 /** Iterative graph rank over the near-duplicate document graph
   * (SURVEY.md §2.9 X1/X7): PageRank as a fixed-K power iteration in
@@ -33,33 +34,6 @@ object GraphRank {
 
   private val S = 1000000000000L // total rank mass, picorank units
 
-  /** Edge-count gate for the graph family's broadcast-scale fast
-    * paths (the x33 CC idiom): a near-dup candidate graph small
-    * enough to broadcast is iterated in one bounded driver pass —
-    * exact integer arithmetic identical to the distributed loop —
-    * instead of K rounds of joins + checkpoint pins. Above the gate
-    * (any 100 TB-scale graph) the distributed plans run unchanged.
-    */
-  val GraphBroadcastMaxEdgesKey = "spark.graft.graph.broadcastMaxEdges"
-
-  private def maxLocalEdges(df: DataFrame): Long =
-    df.sparkSession.conf.getOption(GraphBroadcastMaxEdgesKey)
-      .map(_.toLong).getOrElse(1000000L)
-
-  /** Triangles-only gate, LOWER than the family default: the local
-    * wedge replay is O(Σ outdeg²) = O(E^1.5) under the (deg, id)
-    * orientation — at the 1M-edge family gate that is ~10⁹ driver ops
-    * (minutes, single-threaded) on a hubby graph the distributed
-    * wedge join would spread. pagerank/label-prop are O(E·K) and keep
-    * the family gate. 100k edges bounds the replay at ~3·10⁷ ops.
-    */
-  val TrianglesBroadcastMaxEdgesKey =
-    "spark.graft.graph.triangles.broadcastMaxEdges"
-
-  private def maxLocalTriangleEdges(df: DataFrame): Long =
-    df.sparkSession.conf.getOption(TrianglesBroadcastMaxEdgesKey)
-      .map(_.toLong).getOrElse(math.min(100000L, maxLocalEdges(df)))
-
   /** Spark compares strings as unsigned UTF-8 bytes; Scala's String
     * ordering is UTF-16 — they diverge outside ASCII, so the local
     * vote tiebreak replays the engine's byte order exactly.
@@ -86,7 +60,9 @@ object GraphRank {
     val edges = graft.tools.Materialize(
       pairs.select(col("d1").as("src"), col("d2").as("dst"))
         .unionAll(pairs.select(col("d2").as("src"), col("d1").as("dst"))))
-    if (edges.count() <= maxLocalEdges(docs)) {
+    // broadcast-scale fast path (the x33 CC idiom): one bounded driver
+    // pass, exact integer arithmetic identical to the distributed loop
+    if (ScaleTier.localEdges(docs.sparkSession, edges.count())) {
       val spark = docs.sparkSession
       import spark.implicits._
       val es = edges.collect().map(r => (r.getLong(0), r.getLong(1)))
@@ -191,7 +167,8 @@ object GraphRank {
     val pairs = graft.tools.Materialize(
       Dedup.jaccardPairs(docs, dfCap, threshold)
         .select(col("d1"), col("d2")))
-    if (pairs.count() <= maxLocalTriangleEdges(docs)) {
+    if (ScaleTier.localEdges(docs.sparkSession, pairs.count(),
+        triangles = true)) {
       val spark = docs.sparkSession
       import spark.implicits._
       val es = pairs.collect().map(r => (r.getLong(0), r.getLong(1)))
@@ -303,7 +280,7 @@ object GraphRank {
         .unionAll(pairs.select(col("d2").as("src"), col("d1").as("dst"))))
     val base = docs.select(col("doc_id"), col("lang"))
     val lblFinal: DataFrame =
-      if (edges.count() <= maxLocalEdges(docs)) {
+      if (ScaleTier.localEdges(docs.sparkSession, edges.count())) {
         val spark = docs.sparkSession
         import spark.implicits._
         val es = edges.collect().map(r => (r.getLong(0), r.getLong(1)))

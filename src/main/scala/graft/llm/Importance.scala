@@ -42,7 +42,7 @@ object Importance {
     val inTarget = col("source").isin(targetSources: _*)
     // Spread: full-token explosion (~50×) over the single-split scan
     // — measured as a 1.0 s one-task stage at sf0.1 local[32]
-    val base = graft.tools.Spread(docs)
+    val base = graft.tools.ScaleTier.spread(docs)
       .select(col("doc_id"), inTarget.as("is_t"),
         explode(split(col("text"), " ")).as("w"))
       .filter(length(col("w")) > 0)
@@ -65,7 +65,7 @@ object Importance {
     * tokenize+hash pass, shared by the serve path.
     */
   private def docBuckets(docs: DataFrame, buckets: Int): DataFrame =
-    graft.tools.Spread(docs).select(col("doc_id"),
+    graft.tools.ScaleTier.spread(docs).select(col("doc_id"),
         explode(split(col("text"), " ")).as("w"))
       .filter(length(col("w")) > 0)
       .withColumn("b", expr(s"${Dedup.hash16FastExpr("w")} % $buckets"))
@@ -79,7 +79,7 @@ object Importance {
   def lambdaTable(docs: DataFrame, buckets: Int = 256,
       targetSources: Seq[String] = Seq("src1", "src2")): DataFrame = {
     val inTarget = col("source").isin(targetSources: _*)
-    val bk = graft.tools.Spread(docs)
+    val bk = graft.tools.ScaleTier.spread(docs)
       .select(inTarget.as("is_t"),
         explode(split(col("text"), " ")).as("w"))
       .filter(length(col("w")) > 0)

@@ -45,7 +45,7 @@ object LanguageModel {
     * training, batch scoring, and the serve path.
     */
   private def trigrams(docs: DataFrame): DataFrame =
-    graft.tools.Spread(docs)
+    graft.tools.ScaleTier.spread(docs)
       .filter(length(col("text")) >= 3)
       .select(col("doc_id"), col("lang"),
         explode(expr(

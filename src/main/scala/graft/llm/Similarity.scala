@@ -896,7 +896,7 @@ object Similarity {
     // Spread: ×nLists cosine expansion over the single-split scan
     // (see pqEncode) — the per-vec_id window below shuffles anyway,
     // so the exchange only parallelizes the expansion stage
-    graft.tools.Spread(emb).crossJoin(broadcast(seeds))
+    graft.tools.ScaleTier.spread(emb).crossJoin(broadcast(seeds))
       .withColumn("c", cosTo(col("embedding"), col("ce")))
       .withColumn("rn", row_number().over(Window.partitionBy(col("vec_id"))
         .orderBy(col("c").desc, col("list_id"))))
@@ -1121,7 +1121,7 @@ object Similarity {
     }
     // Spread: bands·planes dot products per row over the single-split
     // scan (the pqEncode/ivfAssign straggler shape)
-    val sigs = graft.tools.Spread(emb)
+    val sigs = graft.tools.ScaleTier.spread(emb)
       .select(col("vec_id") +: col("embedding") +: sigCols: _*)
       .select(col("vec_id"), expr(
         (0 until bands).map(b => s"$b, sig$b")
@@ -1769,7 +1769,7 @@ object Similarity {
     // distances per row) over the single-split corpus scan — measured
     // as a 0.7 s ONE-task stage at sf0.1 local[32] (the x119/x41
     // straggler shape from round 10, same scale-adaptive fix)
-    graft.tools.Spread(emb).crossJoin(broadcast(cbRow))
+    graft.tools.ScaleTier.spread(emb).crossJoin(broadcast(cbRow))
       .select(col("vec_id"),
         pqArgminCodes(col("embedding"), m, dim / m).as("codes"))
 
@@ -2748,7 +2748,7 @@ object Similarity {
     * power-iteration step needs no join at all (see below).
     */
   private def microArrays(emb: DataFrame): DataFrame =
-    graft.tools.Materialize(graft.tools.Spread(emb)
+    graft.tools.Materialize(graft.tools.ScaleTier.spread(emb)
       // empty/null embeddings contributed no rows in the previous
       // (vec, pos)-exploded form; keep that semantics — dotExpr's
       // sequence(0, size(xs)-1) would otherwise build [0, -1] on an

@@ -714,7 +714,7 @@ object TextAnalysis {
     * map-side partials everywhere, no windows.
     */
   def charEntropy(docs: DataFrame, lowTheta: Double): DataFrame = {
-    val perDoc = graft.tools.Spread(docs)
+    val perDoc = graft.tools.ScaleTier.spread(docs)
       .filter(length(col("text")) >= 2)
       .select(col("doc_id"), col("source"), explode(expr(
         "transform(sequence(1, length(text) - 1), i -> substr(text, i, 2))"))

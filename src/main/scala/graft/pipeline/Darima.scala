@@ -66,9 +66,9 @@ final case class DarimaConfig(
     olsP: Int = 2,
     olsTrend: Boolean = false,
     /** "range" = sketch-bounded range chunks (no global sort — the
-      * 100 TB default); "ntile" = exact distributed ntile
-      * (OrderedRank), bit-identical to SQL NTILE and therefore the
-      * oracle-checkable choice.
+      * 100 TB default); "timerange" = equal-width time ranges,
+      * exactly mirrorable in SQL and therefore the oracle-checkable
+      * choice.
       */
     chunker: String = "range",
     /** Max AR lag for the longar fitter; 0 = auto (14·freq+8 when
@@ -160,6 +160,21 @@ final case class DarimaConfig(
     * values pass through.
     */
   def maxTotalDEff: Int = if (maxTotalD < 0) 2 else maxTotalD
+
+  // string knobs fail when the config is built, not mid-job
+  require(Set("longar", "arma", "sarima", "olsar")(fitter),
+    s"unknown fitter '$fitter' (expected longar|arma|sarima|olsar)")
+  require(Set("dlsa", "mean")(method),
+    s"unknown combine method '$method' (expected dlsa|mean)")
+  require(Set("range", "timerange")(chunker),
+    s"unknown chunker '$chunker' (expected range|timerange)")
+  require(Set("all", "seasonal")(decayScope),
+    s"unknown decayScope '$decayScope' (expected all|seasonal)")
+  require(Set("off", "holdout")(seasonalWeighting),
+    s"unknown seasonalWeighting '$seasonalWeighting' (expected off|holdout)")
+  require(
+    boxCox == "off" || boxCox == "auto" || boxCox.toDoubleOption.nonEmpty,
+    s"unknown boxCox '$boxCox' (expected off|auto|<lambda>)")
 }
 
 object Darima {
@@ -269,8 +284,6 @@ object Darima {
           maxD = cfg.maxTotalDEff), cfg.tol)
       case "sarima" =>
         Sarima2Ar.toAr(sarimaFamilySearch(values, cfg), cfg.tol)
-      case other => throw new IllegalArgumentException(
-        s"unknown fitter '$other' (expected longar|arma|sarima|olsar)")
     }
     val ar0 = fitAr(values0)
     // Joint estimation for the search fitters (one Cochrane–Orcutt
@@ -348,15 +361,12 @@ object Darima {
       col("value").cast("double").as("v"))
     cfg.chunker match {
       case "range" => Chunker.rangeChunks(named, col("t"), cfg.numChunks)
-      case "ntile" => Chunker.ntileChunks(named, col("t"), cfg.numChunks)
       case "timerange" => timeBounds match {
         // caller already knows (tmin, tmax) — skip the bounds job
         case Some(b) =>
           Chunker.timeChunksBounded(named, col("t"), cfg.numChunks, b)
         case None => Chunker.timeChunks(named, col("t"), cfg.numChunks)
       }
-      case other => throw new IllegalArgumentException(
-        s"unknown chunker '$other' (expected range|ntile|timerange)")
     }
   }
 
@@ -534,14 +544,11 @@ object Darima {
     ArLinearModel(beta0, beta1, pi, sigma2, n, harms)
   }
 
-  /** Last-p tail of the series, time-ordered — the only train data the
-    * driver ever holds (TakeOrdered, no full collect; the reference
-    * collects the whole 121k-row series twice, SURVEY.md §4.1).
+  /** Last-p tail of the series as time-ordered (time, value) pairs —
+    * the only train data the driver ever holds (TakeOrdered, no full
+    * collect; the reference collects the whole 121k-row series twice,
+    * SURVEY.md §4.1). Times feed the Fourier phase.
     */
-  def seriesTail(series: DataFrame, p: Int): Array[Double] =
-    seriesTailTimed(series, p).map(_._2)
-
-  /** Tail as (time, value) pairs — times feed the Fourier phase. */
   def seriesTailTimed(series: DataFrame, p: Int): Array[(Double, Double)] = {
     val rows = series
       .select(col("time").cast("double").as("t"),
@@ -1078,8 +1085,6 @@ object Darima {
             (acc, b) => acc + when(col("t") > b, 1).otherwise(0))
             .cast("int"))
           .drop("__b")
-      case other => throw new IllegalArgumentException(
-        s"unknown fleet chunker '$other' (expected range|timerange)")
     }
   }
 

@@ -1,7 +1,7 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
+import graft.GraftSession
 import graft.eval.Metrics
 
 /** CLI entry point mirroring the reference's single executable run
@@ -29,14 +29,7 @@ object DarimaMain {
         (args(0), args(1), args(2),
           DarimaConfig(numChunks = k, method = method, harmYearly = 3))
       }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-darima")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession()
     spark.sparkContext.setLogLevel("WARN")
     try {
       val cfg = cfg0

@@ -1,7 +1,7 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, lit}
+import graft.GraftSession
 import graft.eval.Metrics
 
 /** Evaluate the pipeline over the reference's whole test corpus — all
@@ -22,14 +22,7 @@ object ZonesEval {
 
   def main(args: Array[String]): Unit = {
     val dataDir = args.headOption.getOrElse("/root/reference/data")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-zones")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession()
     spark.sparkContext.setLogLevel("WARN")
     try {
       val harmEnv0 = sys.env.getOrElse("GRAFT_HARM_YEARLY", "3")

@@ -12,8 +12,8 @@ import graft.eval.Metrics
   *
   * Every query here is oracle-checked end to end. The technique
   * (proved by d05 in round 1): run the REAL distributed pipeline —
-  * exact ntile chunking, chunk-partition fit, DLSA combine, the driver
-  * forecast recursion, the metric stack — but pin the inner fit to
+  * equal-width timerange chunking, chunk-partition fit, DLSA combine,
+  * the driver forecast recursion, the metric stack — but pin the inner fit to
   * the closed-form `olsar` fitter (OLS AR(p) by streaming normal
   * equations, ArFit.olsAr), which a DuckDB oracle can reproduce:
   * Cramer's rule for the per-chunk fit, plain SQL for the DLSA

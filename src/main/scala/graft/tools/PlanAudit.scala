@@ -412,15 +412,10 @@ object PlanAudit {
       // corpus size) — nested-loop by construction, like the x45
       // allocation shapes; everything corpus-sized joins equi
       "x160_hll_overlap" -> Set("BNLJoin"))
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      // the audit judges the 100 TB plan shape: disable the
-      // broadcast-tier local-window fast path (LocalTier) so the
-      // distributed bucketed-window machinery — the shape that runs
-      // at scale — is what gets audited
-      .config(graft.tools.LocalTier.ConfKey, "0")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    // fixed parallelism, so the audit reads the same on every machine;
+    // every size gate at its at-scale arm, the plan shape at 100 TB
+    val spark = graft.GraftSession(8)
+    spark.conf.set(ScaleTier.ConfKey, "distributed")
     spark.sparkContext.setLogLevel("ERROR")
     var flagged = 0
     // The model-training subtrees (PQ codebook, shared Lloyd loop)

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Dump formatted physical plans for named declared queries —
   * the .explain("formatted") iteration loop the scale work demands.
@@ -8,17 +8,11 @@ import org.apache.spark.sql.SparkSession
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession(8)
     spark.sparkContext.setLogLevel("ERROR")
-    // extra session confs from the environment, "k=v;k=v" — lets a
-    // plan capture toggle engine knobs (e.g. spark.graft.scan.spread)
+    // lets a plan capture toggle engine knobs (e.g. spark.graft.tier)
     // to reproduce a before/after plan pair from one build
-    sys.env.get("SPARK_GRAFT_CONFS").foreach(_.split(';').foreach { kv =>
-      val Array(k, v) = kv.split("=", 2)
-      spark.conf.set(k.trim, v.trim)
-    })
+    GraftSession.applyEnvConfs(spark)
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     args.foreach { name =>
       println(s"===== $name =====")

@@ -1,7 +1,7 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 import scala.collection.mutable
 
 /** Per-query job/stage profiler — the guide-§1 "empirical" loop
@@ -17,23 +17,9 @@ import scala.collection.mutable
 object ProfileQ {
   def main(args: Array[String]): Unit = {
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // match Bench: sort-based shuffle writer (see Bench.scala)
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_BYPASS", "1"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession()
     spark.sparkContext.setLogLevel("ERROR")
-    // extra session confs ("k=v;k=v") for A/B isolation of knobs
-    sys.env.get("SPARK_GRAFT_CONFS").foreach(_.split(';').foreach { kv =>
-      val Array(k, v) = kv.split("=", 2)
-      spark.conf.set(k.trim, v.trim)
-    })
+    GraftSession.applyEnvConfs(spark)
 
     case class JobRec(id: Int, var start: Long = 0L, var end: Long = 0L,
       var stages: Int = 0, var tasks: Int = 0, var taskTimeMs: Long = 0L)

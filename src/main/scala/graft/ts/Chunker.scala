@@ -2,35 +2,24 @@ package graft.ts
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
 /** Contiguous time-ordered chunk assignment — the paper-correct
   * replacement for the reference's round-robin `repartition(k)`
   * (reference: darima.py:151-155; the DARIMA paper requires
   * contiguous subseries — SURVEY.md §1.4.2).
   *
-  * Two strategies with identical semantics at different scales:
+  * Two strategies, both without a global sort:
   *
-  *  - [[ntileChunks]]: `ntile(k) OVER (ORDER BY time)` — fully
-  *    declarative and oracle-checkable, but the global order-by is a
-  *    single-reducer sort, fine up to ~10^7 rows.
-  *  - [[rangeChunks]]: `repartitionByRange(k, time)` + per-partition
-  *    id — Spark samples range bounds, so each chunk is a contiguous
-  *    time interval with roughly (not exactly) n/k rows. No global
-  *    sort, no single-point bottleneck: this is the 100 TB path. The
-  *    DARIMA math only needs contiguity + within-chunk order, not
-  *    exact equal sizes, so the approximation is semantically free.
+  *  - [[timeChunks]]: equal-width time ranges, exactly mirrorable in
+  *    SQL (see below).
+  *  - [[rangeChunks]]: quantile-sketch bounds on time + a `when`
+  *    fold, so each chunk is a contiguous time interval with roughly
+  *    (not exactly) n/k rows. No single-point bottleneck: this is
+  *    the 100 TB path. The DARIMA math only needs contiguity +
+  *    within-chunk order, not exact equal sizes, so the
+  *    approximation is semantically free.
   */
 object Chunker {
-
-  def ntileChunks(df: DataFrame, timeCol: Column, k: Int,
-      tieBreak: Column*): DataFrame = {
-    // Exact ntile semantics, computed distributed (OrderedRank) —
-    // no single-partition global sort.
-    val tb = tieBreak.headOption.getOrElse(timeCol)
-    OrderedRank.withNtile(df, timeCol, tb, k, "chunk_id")
-      .withColumn("chunk_id", col("chunk_id") - 1)
-  }
 
   /** Equal-width TIME ranges: chunk = floor((t−tmin)/(tmax−tmin)·k),
     * clamped. One min/max aggregate + a pure codegen projection — no

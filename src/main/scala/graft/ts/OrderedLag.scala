@@ -111,11 +111,11 @@ object OrderedLag {
       outCols: Seq[String], maxLag: Int, buckets: Int): DataFrame = {
     require(outCols.nonEmpty && maxLag >= 1)
 
-    // Broadcast-tier fast path (graft.tools.LocalTier): below the
+    // Broadcast-tier fast path (graft.tools.ScaleTier): below the
     // size gate the single-bucket window is the whole computation —
     // no percentile job, no boundary pin, no patch join. Identical
     // results by the same argument as the degenerate branch below.
-    if (graft.tools.LocalTier(df)) {
+    if (graft.tools.ScaleTier.localWindow(df)) {
       val w = Window.partitionBy(col("__bucket"))
         .orderBy(orderCol, tieBreak)
       return build(df.withColumn("__bucket", lit(0)), w)

@@ -44,19 +44,20 @@ object OrderedRank {
     */
   private def ranked(df: DataFrame, orderCol: Column, tieBreak: Column,
       outCol: String, buckets: Int): DataFrame = {
-    // Broadcast-tier fast path (graft.tools.LocalTier): below the
-    // size gate, ONE single-bucket window computes the row number and
-    // total in a single read — no pin (the frame is read once), no
-    // percentile job, no per-bucket count/offset join. Identical
-    // results by the same argument as the degenerate branch below.
-    if (graft.tools.LocalTier(df)) {
+    // ONE single-bucket window computes the row number and total below
+    // the broadcast-tier gate (graft.tools.ScaleTier) — one read, no
+    // pin, no percentile job, no per-bucket count/offset join — and on
+    // degenerate input (constant order key or empty). Identical
+    // results: the buckets only parallelize the sort.
+    def oneWindow(d: DataFrame): DataFrame = {
       val w = Window.partitionBy(col("__bucket")).orderBy(orderCol, tieBreak)
-      return df.withColumn("__bucket", lit(0))
+      d.withColumn("__bucket", lit(0))
         .withColumn(outCol, row_number().over(w).cast("long"))
         .withColumn("__n",
           count(lit(1)).over(Window.partitionBy(col("__bucket"))))
         .drop("__bucket")
     }
+    if (graft.tools.ScaleTier.localWindow(df)) return oneWindow(df)
     val pinned = graft.tools.Materialize(df)
     val qs = (1 until math.max(buckets, 2)).map(i => i.toDouble / buckets)
     val stats = pinned.select(
@@ -67,15 +68,7 @@ object OrderedRank {
       if (stats.isNullAt(0)) Seq.empty
       else stats.getSeq[Double](0).distinct.sorted
 
-    if (bounds.isEmpty) {
-      // Degenerate input (constant order key or empty): a single
-      // local window is both correct and cheap.
-      val w = Window.partitionBy(col("__bucket")).orderBy(orderCol, tieBreak)
-      return pinned.withColumn("__bucket", lit(0))
-        .withColumn(outCol, row_number().over(w).cast("long"))
-        .withColumn("__n", count(lit(1)).over(Window.partitionBy(col("__bucket"))))
-        .drop("__bucket")
-    }
+    if (bounds.isEmpty) return oneWindow(pinned)
 
     val based = pinned.withColumn("__bucket",
       OrderedLag.bucketOf(orderCol, bounds))
@@ -126,15 +119,17 @@ object OrderedRank {
   def withPrefixSum(df: DataFrame, orderCol: Column, tieBreak: Column,
       valueCol: Column, outCol: String = "__psum",
       buckets: Int = 32): DataFrame = {
-    // broadcast-tier fast path — see `ranked`
-    if (graft.tools.LocalTier(df)) {
-      val v0 = valueCol.cast("long")
+    val v = valueCol.cast("long")
+    // one single-bucket window: broadcast-tier gate or degenerate
+    // input — see `ranked`
+    def oneWindow(d: DataFrame): DataFrame = {
       val w = Window.partitionBy(col("__bucket")).orderBy(orderCol, tieBreak)
         .rowsBetween(Window.unboundedPreceding, -1)
-      return df.withColumn("__bucket", lit(0))
-        .withColumn(outCol, coalesce(sum(v0).over(w), lit(0L)))
+      d.withColumn("__bucket", lit(0))
+        .withColumn(outCol, coalesce(sum(v).over(w), lit(0L)))
         .drop("__bucket")
     }
+    if (graft.tools.ScaleTier.localWindow(df)) return oneWindow(df)
     // same triple-read pin as `ranked` — see its doc comment
     val pinned = graft.tools.Materialize(df)
     val qs = (1 until math.max(buckets, 2)).map(i => i.toDouble / buckets)
@@ -145,15 +140,7 @@ object OrderedRank {
     val bounds: Seq[Double] =
       if (stats.isNullAt(0)) Seq.empty
       else stats.getSeq[Double](0).distinct.sorted
-    val v = valueCol.cast("long")
-
-    if (bounds.isEmpty) {
-      val w = Window.partitionBy(col("__bucket")).orderBy(orderCol, tieBreak)
-        .rowsBetween(Window.unboundedPreceding, -1)
-      return pinned.withColumn("__bucket", lit(0))
-        .withColumn(outCol, coalesce(sum(v).over(w), lit(0L)))
-        .drop("__bucket")
-    }
+    if (bounds.isEmpty) return oneWindow(pinned)
 
     val based = pinned.withColumn("__bucket",
       OrderedLag.bucketOf(orderCol, bounds))

@@ -144,6 +144,23 @@ class DarimaPipelineSpec extends AnyFunSuite {
     assert(math.abs(mean("ar1") - 0.6) < 1e-12)
   }
 
+  test("config: an unknown string knob is rejected when the config is built") {
+    val bad: Seq[() => DarimaConfig] = Seq(
+      () => DarimaConfig(fitter = "lonagr"),
+      () => DarimaConfig(method = "median"),
+      () => DarimaConfig(chunker = "ntile"),
+      () => DarimaConfig(decayScope = "recent"),
+      // a case slip used to run silently as "off"
+      () => DarimaConfig(seasonalWeighting = "Holdout"),
+      () => DarimaConfig(boxCox = "log"),
+      () => DarimaConfig().copy(fitter = "ar"))
+    bad.foreach(c => intercept[IllegalArgumentException](c()))
+    Seq(DarimaConfig(), DarimaConfig(fitter = "olsar", method = "mean",
+      chunker = "timerange", decayScope = "seasonal",
+      seasonalWeighting = "holdout", boxCox = "auto"),
+      DarimaConfig(boxCox = "0.5")).foreach(c => assert(c.numChunks == 4))
+  }
+
   test("electricity e2e: reference fixture, K=4, forecast h=2879") {
     val train = referenceCsv(
       "/root/reference/data/NEMASSBOST_train.csv")

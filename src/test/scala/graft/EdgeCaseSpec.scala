@@ -180,9 +180,7 @@ class EdgeCaseSpec extends AnyFunSuite {
     val docs = graft.Tables.documents(spark, "/root/testdata/sf0.001")
     def both(f: () => org.apache.spark.sql.DataFrame): (Seq[String], Seq[String]) = {
       val fast = f().collect().map(_.toString).toSeq
-      spark.conf.set(graft.llm.GraphRank.GraphBroadcastMaxEdgesKey, "0")
-      val dist = try f().collect().map(_.toString).toSeq
-        finally spark.conf.unset(graft.llm.GraphRank.GraphBroadcastMaxEdgesKey)
+      val dist = distOnly(f().collect().map(_.toString).toSeq)
       (fast, dist)
     }
     val (prF, prD) = both(() =>
@@ -198,28 +196,6 @@ class EdgeCaseSpec extends AnyFunSuite {
     assert(trF.nonEmpty)
   }
 
-  test("triangles: dedicated gate bounds the local replay independently") {
-    // the triangles local replay is O(E^1.5) wedge work, so it gates
-    // on its own (lower) key: with the family gate forced to 0 the
-    // dedicated key alone must still select the local path, and the
-    // result must match the default run bit for bit
-    val docs = graft.Tables.documents(spark, "/root/testdata/sf0.001")
-    val base = graft.llm.GraphRank.triangles(docs, 10, 0.02)
-      .collect().map(_.toString).toSeq
-    spark.conf.set(graft.llm.GraphRank.GraphBroadcastMaxEdgesKey, "0")
-    spark.conf.set(
-      graft.llm.GraphRank.TrianglesBroadcastMaxEdgesKey, "1000000")
-    val local = try graft.llm.GraphRank.triangles(docs, 10, 0.02)
-        .collect().map(_.toString).toSeq
-      finally {
-        spark.conf.unset(graft.llm.GraphRank.GraphBroadcastMaxEdgesKey)
-        spark.conf.unset(
-          graft.llm.GraphRank.TrianglesBroadcastMaxEdgesKey)
-      }
-    assert(local == base)
-    assert(base.nonEmpty)
-  }
-
   test("connected components: broadcast fast path equals the loop") {
     import spark.implicits._
     // deterministic pseudo-random sparse graph: chains, merges,
@@ -231,11 +207,10 @@ class EdgeCaseSpec extends AnyFunSuite {
     }.filter { case (a, b) => a != b }.toDF("d1", "d2")
     val fast = graft.llm.Dedup.connectedComponents(verts, edges)
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted
-    spark.conf.set(graft.llm.Dedup.CcBroadcastMaxEdgesKey, "0")
-    val loop = try {
+    val loop = distOnly {
       graft.llm.Dedup.connectedComponents(verts, edges)
         .collect().map(r => (r.getLong(0), r.getLong(1))).sorted
-    } finally spark.conf.unset(graft.llm.Dedup.CcBroadcastMaxEdgesKey)
+    }
     assert(fast.sameElements(loop),
       s"fast=${fast.mkString(",")} loop=${loop.mkString(",")}")
   }

@@ -8,14 +8,6 @@ import graft.ts.OrderedLag
 class OrderedLagSpec extends AnyFunSuite {
   import SparkTestSession._
 
-  /** Pin the DISTRIBUTED bucketed-window path (the 100 TB shape) —
-    * see OrderedRankSpec.distOnly.
-    */
-  private def distOnly[T](body: => T): T = {
-    spark.conf.set(graft.tools.LocalTier.ConfKey, "0")
-    try body finally spark.conf.unset(graft.tools.LocalTier.ConfKey)
-  }
-
   test("broadcast-tier fast path equals the distributed lag") {
     val ev = Tables.events(spark, sf)
       .select(col("event_id"), col("ts"), col("value"))

@@ -8,16 +8,6 @@ import graft.ts.OrderedRank
 class OrderedRankSpec extends AnyFunSuite {
   import SparkTestSession._
 
-  /** Pin the DISTRIBUTED bucketed-window path (the 100 TB shape):
-    * below the LocalTier size gate small test frames would otherwise
-    * take the single-bucket fast path and leave the machinery under
-    * test unexercised.
-    */
-  private def distOnly[T](body: => T): T = {
-    spark.conf.set(graft.tools.LocalTier.ConfKey, "0")
-    try body finally spark.conf.unset(graft.tools.LocalTier.ConfKey)
-  }
-
   test("distributed row_number equals global-window row_number") {
     val ev = Tables.events(spark, sf)
       .select(col("event_id"), col("ts"))
@@ -75,7 +65,7 @@ class OrderedRankSpec extends AnyFunSuite {
   }
 
   test("broadcast-tier fast path equals the distributed rank/ntile/psum") {
-    // the LocalTier single-bucket branch (default confs, small frame)
+    // the ScaleTier single-bucket branch (default confs, small frame)
     // must reproduce the bucketed machinery bit for bit
     val ev = Tables.events(spark, sf)
       .select(col("event_id"), col("ts"), col("value"))

@@ -6,17 +6,19 @@ import graft.queries.Relational
 
 object SparkTestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession(4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }
   val sf: String = "/root/testdata/sf0.001"
+
+  /** Runs `body` under `spark.graft.tier=distributed`: every size gate
+    * takes its at-scale arm, which small test frames never reach.
+    */
+  def distOnly[T](body: => T): T = {
+    spark.conf.set(graft.tools.ScaleTier.ConfKey, "distributed")
+    try body finally spark.conf.unset(graft.tools.ScaleTier.ConfKey)
+  }
 }
 
 class RelationalSpec extends AnyFunSuite {

@@ -260,15 +260,14 @@ class ScaleSpec extends AnyFunSuite {
       (col("id") + 1).as("d2"))
     // force the distributed loop: this test pins the loop's O(log n)
     // property, which the broadcast-scale fast path would bypass
-    spark.conf.set(graft.llm.Dedup.CcBroadcastMaxEdgesKey, "0")
     val t0 = System.nanoTime()
-    val (comps, secs) = try {
+    val (comps, secs) = distOnly {
       val cc = graft.llm.Dedup.connectedComponents(verts, edges,
         maxIter = 25)
       val c = cc.select(countDistinct(col("component")),
         max(col("component"))).collect()(0)
       (c, (System.nanoTime() - t0) / 1e9)
-    } finally spark.conf.unset(graft.llm.Dedup.CcBroadcastMaxEdgesKey)
+    }
     info(f"200k chain CC: ${secs}%.1f s")
     assert(comps.getLong(0) == 1L, s"components=${comps.getLong(0)}")
     assert(comps.getLong(1) == 0L)
